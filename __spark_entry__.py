@@ -1074,8 +1074,8 @@ FROM read_parquet('{sf_dir}/lineitem.parquet') WHERE l_linenumber = 1
 
 def _q_katz_iter4(spark, sf_dir):
     """Katz centrality, 4 attenuated power iterations on the weighted T
-    graph (katz.py — same one-exchange-per-iteration contract as
-    pagerank, no global reduce in the loop). Oracle unrolls
+    graph (pagerank.py's power-iteration core — pagerank's
+    one-exchange-per-iteration contract, no global reduce in the loop). Oracle unrolls
     x_t = beta + alpha * A^T x_{t-1} at full float64, rounding 9 at the
     end only."""
     from comm_detect_spark.operators.katz import katz
@@ -1557,7 +1557,7 @@ def _q_pagerank_iter5(spark, sf_dir):
 
 
 def _pagerank_oracle_sql(iters: int, damping: float = 0.85) -> str:
-    """Unrolled replay of pagerank's recurrence (pagerank.py:52): one CTE
+    """Unrolled replay of pagerank's recurrence (pagerank.py): one CTE
     per iteration, each computing the dangling mass of the previous vector
     and the out-weight-normalized contribution sum; intermediates stay
     full-precision float64, only the final SELECT rounds (round 9 — the
@@ -2317,8 +2317,8 @@ def _q_avg_neighbor_degree(spark, sf_dir):
 
 def _q_pagerank_trace(spark, sf_dir):
     """Per-iteration L1 rank movement (pagerank.py:pagerank_trace —
-    pagerank's exact recurrence plus one vertex join per iteration; the
-    convergence-budget diagnostic)."""
+    pagerank's exact recurrence, the L1 one aggregate per iteration over
+    the filled state cache; the convergence-budget diagnostic)."""
     from comm_detect_spark.operators.pagerank import pagerank_trace
 
     edges = _g_directed(spark, sf_dir)

@@ -49,8 +49,11 @@ def adaptive_partitions(
     measured that shrinking tiny local graphs below the thread count COSTS
     ~25% — scripts/lpa_p_test.py — because the serialized sweep loses more
     than empty-task scheduling saves) and capped by
-    ``spark.sql.shuffle.partitions``, the cluster-sized ceiling."""
-    if num_partitions:
+    ``spark.sql.shuffle.partitions``, the cluster-sized ceiling. A
+    ``num_partitions`` below 1 raises ValueError."""
+    if num_partitions is not None:
+        if num_partitions < 1:
+            raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
         return num_partitions
     conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = spark.sparkContext.defaultParallelism

@@ -1,99 +1,4 @@
-"""Katz centrality — attenuated path counting by power iteration.
+"""Katz centrality lives in the power-iteration core (pagerank.py); this
+module keeps its import path."""
 
-No reference twin (SURVEY §2); Katz (1953) completes the repo's
-centrality family (degree, PageRank, personalized PageRank, HITS,
-approximate harmonic): x = beta + alpha * A^T x counts all incoming
-walks attenuated by alpha^length, the classic influence measure when
-teleport-style normalization (PageRank) is not wanted. Converges iff
-alpha < 1/lambda_max(A); with integer link-count weights, alpha well
-under 1/max_weighted_indegree is the safe practical bound (stated — the
-operator does not estimate the spectral radius).
-
-Same plan contract as pagerank (pagerank.py:52): the edge table is
-cached hash(src, P), the iterated score vector lives on hash(vid, P), so
-the gather join is exchange-free and only the dst-aggregation (map-side
-combined) shuffles edge-sized rows; one exchange per iteration,
-plan-asserted in tests. Lineage is truncated per round by the
-IterationDriver (resume/metrics included for free). Scores stay raw
-(beta-anchored) — no global normalization step, so there is no
-all-reduce in the loop (the one scalar PageRank needs for dangling
-mass does not exist here: dangling vertices simply keep score beta).
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from comm_detect_spark.graph.core import vertex_range
-from comm_detect_spark.plans.driver import IterationDriver
-
-
-def katz(
-    spark: SparkSession,
-    edges: DataFrame,
-    n: int | None = None,
-    iterations: int = 10,
-    alpha: float = 0.05,
-    beta: float = 1.0,
-    driver: IterationDriver | None = None,
-    vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
-    resume: bool = False,
-) -> DataFrame:
-    """(vid BIGINT, score DOUBLE): x_{t} = beta + alpha * sum over
-    in-edges (w * x_{t-1}[src]), from x_0 = beta, for ``iterations``
-    rounds, scores rounded to 9 decimals at the END only (the repo's
-    cross-engine sum-order convention). With a checkpoint-backed driver
-    and ``resume=True``, continues from the latest snapshot iteration —
-    kill-at-k == uninterrupted (the recurrence is deterministic and the
-    snapshot IS x_k)."""
-    drv = driver or IterationDriver()
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if vertices is not None:
-        verts = vertices.select("vid").distinct().repartition(p, "vid")
-    else:
-        assert n is not None
-        verts = vertex_range(spark, n).repartition(p, "vid")
-    e = (
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("weight").cast("double").alias("w"),
-        )
-        .repartition(p, "src")
-        .persist()
-    )
-    e.count()
-
-    resumed = drv.try_resume(spark) if resume else None
-    if resumed is not None:
-        state, start_it, _ = resumed
-    else:
-        state = drv.start(
-            verts.select("vid", F.lit(float(beta)).alias("score"))
-        )
-        start_it = 0
-    it = start_it
-    for it in range(start_it + 1, iterations + 1):
-        gathered = (
-            e.join(
-                state.select(
-                    F.col("vid").alias("src"), F.col("score").alias("s")
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.sum(F.col("w") * F.col("s")).alias("contrib"))
-        )
-        new_state = state.select("vid").join(gathered, "vid", "left").select(
-            "vid",
-            (
-                F.lit(float(beta))
-                + F.lit(float(alpha)) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("score"),
-        )
-        state = drv.step(new_state, it, changed=-1)
-    out = drv.finish(it)
-    e.unpersist()
-    return out.select("vid", F.round("score", 9).alias("score"))
+from comm_detect_spark.operators.pagerank import katz  # noqa: F401

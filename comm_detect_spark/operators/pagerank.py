@@ -1,56 +1,259 @@
-"""Weighted PageRank over a directed edge table (SURVEY Table C).
+"""Power iteration over a directed edge table (SURVEY Table C): weighted
+PageRank, personalized PageRank, the PageRank convergence trace and Katz
+centrality are thin callers of ONE private core:
 
-r' = (1-d)/n + d * ( sum_{u->v} r_u * w(u,v)/wout(u)  +  dangling_mass/n )
+    r' = base + d * ( s + dm * reset ),   s(v) = sum_{u->v} r_u * frac(u, v)
+
+* PageRank: base = (1-d)/n, reset = 1/n, frac = w/wout(u), dm = the rank
+  mass on dangling vertices (no out-edges).
+* personalized PageRank: base = (1-d) * p(v), reset = p(v) — the teleport
+  vector, 1/|S| on the seed set S and 0 elsewhere.
+* Katz: base = beta, d = alpha, frac = the raw weight, no dangling term.
+
+The core has three parts: ``_setup`` (edge cache, vertex table, dangling
+flags), ``_step`` (the step builder above) and ``_iterate`` (the loop on
+IterationDriver: start, resume, warm start, ``tol`` and the per-iteration
+L1).
 
 Plan shape per iteration (the thing that must survive 100x scale-up):
 
-    edges_prep (cached hash(src, P))  ⋈  ranks (hash(vid, P))  -- NO exchange
+    edges_prep (cached hash(src, P))  ⋈  state (hash(vid, P))  -- NO exchange
       -> project (dst, contrib)
       -> groupBy(dst).sum            -- partial agg map-side, THE one exchange
-      -> join cached verts (hash(vid, P)) + broadcast dangling  -- NO exchange
+      -> left join onto the state's own (vid, flags)           -- NO exchange
+      -> cross join the broadcast one-row dangling mass
 
-* ``frac = w/wout`` is precomputed ONCE and cached hash-partitioned on src
-  with the same count P the iterated ranks carry on vid, so the join and
-  the verts re-join are exchange-free — ONE edge-sized exchange (the dst
-  aggregation, shrunk by map-side combine) per iteration.
-* dangling mass is a semi-join agg on the (small) dangling vertex set,
-  collected as ONE scalar per iteration.
+* ``frac`` is computed ONCE in setup and cached hash-partitioned on src
+  with the same count P the iterated state carries on vid, so the gather
+  join and the state re-join are exchange-free: ONE edge-sized exchange
+  (the dst aggregation, shrunk by map-side combine) per iteration. Both
+  per-iteration joins carry a SHUFFLE_HASH hint: without it the planner
+  broadcasts the state whenever its estimate fits the threshold (a serial
+  driver collect of the full vertex state every iteration) or, at scale,
+  sort-merge joins and re-sorts the cached edge table every iteration.
+  Caveat (plans/power_iteration/): the lazily checkpointed state that
+  IterationDriver installs reports UnknownPartitioning, so from iteration
+  2 on the vertex-sized state is shuffled once per join; the state side
+  is exchange-free only while the state is a cached frame.
+* the state carries a precomputed ``dang`` flag, so the dangling mass is
+  one conditional sum over the cached state, broadcast as a one-row frame
+  into the same job: no semi-join, no driver collect.
 * hub skew (power-law dst) is handled by AQE skew-join splitting plus the
   optional ``salt`` two-phase aggregation: pre-aggregate contributions on
   (dst, salt) then finish on dst — bounds any single reducer's key volume.
-* lineage is truncated every few iterations via IterationDriver.
+* lineage is truncated every iteration by IterationDriver (a lazy
+  localCheckpoint: one Spark job per iteration).
+* with ``tol`` (and in ``pagerank_trace``) the state also carries the
+  previous rank as ``prev``; the L1 movement is then one aggregate over the
+  cache that iteration's action fills, not a join against the old state.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from comm_detect_spark.graph.core import (
-    adaptive_partitions,
-    out_weights,
-    vertex_range,
-)
-from comm_detect_spark.plans.driver import IterationDriver
+from comm_detect_spark.graph.core import adaptive_partitions, vertex_range
+from comm_detect_spark.plans.driver import IterationDriver, release
 
 
-def _scatter_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-block scatter-aggregate: sum contribs per dst with numpy
-    (np.add.reduceat over the dst-sorted batch — no per-row Python).
-    Deterministic: batch sorted by (dst, contrib) before summing, so the
-    float accumulation order is a pure function of the data."""
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    contrib = pdf["contrib"].to_numpy(dtype=np.float64)
-    order = np.lexsort((contrib, dst))
-    dst, contrib = dst[order], contrib[order]
-    boundary = np.empty(dst.size, dtype=bool)
-    boundary[0] = True
-    boundary[1:] = dst[1:] != dst[:-1]
-    starts = np.flatnonzero(boundary)
-    sums = np.add.reduceat(contrib, starts)
-    return pd.DataFrame({"vid": dst[starts], "s": sums})
+class _Setup(NamedTuple):
+    edges: DataFrame  # (src, dst, frac), cached hash(src, p)
+    verts: DataFrame  # (vid) or, with dangling flags, (vid, dang)
+    n: int
+    p: int
+    has_dangling: bool
+    cached: list[DataFrame]
+
+    def __enter__(self) -> "_Setup":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self.cached:
+            df.unpersist()
+
+
+def _setup(
+    spark: SparkSession,
+    edges: DataFrame,
+    n: int | None,
+    vertices: DataFrame | None,
+    num_partitions: int | None,
+    normalize: bool = True,
+) -> _Setup:
+    """Vertex set: dense range(n), or an explicit ``vertices(vid)`` table
+    (sparse id spaces). The edge table is repartitioned on src FIRST and
+    the out-weights derived on that partitioning, so the wout aggregation
+    and the frac join ride the ONE edge shuffle (ReuseExchange). With
+    ``normalize=False`` the raw weight is cached as ``frac`` and there are
+    no dangling flags. Otherwise ``dang`` marks the vertices absent from
+    the distinct-src set of the just-filled cache (not a second pass over
+    the input frame)."""
+    cached = []
+    if vertices is not None:
+        verts = vertices.select("vid").distinct().persist()
+        cached.append(verts)
+        n = verts.count()
+    elif n is None:
+        raise ValueError("pass the vertex count n or a vertices table")
+    else:
+        # plain distributed range — cheap to rescan, never persisted
+        verts = vertex_range(spark, n)
+    p = adaptive_partitions(spark, n, num_partitions)
+    e2 = edges.select(
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+        "weight",
+    ).repartition(p, "src")
+    if normalize:
+        wout = e2.groupBy("src").agg(F.sum("weight").alias("wout"))
+        frac = e2.join(wout.hint("shuffle_hash"), "src").select(
+            "src", "dst", (F.col("weight") / F.col("wout")).alias("frac")
+        )
+    else:
+        frac = e2.select("src", "dst", F.col("weight").cast("double").alias("frac"))
+    edges_prep = frac.persist()
+    cached.append(edges_prep)
+    edges_prep.count()
+    if not normalize:
+        return _Setup(edges_prep, verts, n, p, False, cached)
+    dangling = verts.join(
+        edges_prep.select(F.col("src").alias("vid")).distinct(),
+        "vid",
+        "left_anti",
+    ).persist()
+    cached.append(dangling)
+    has_dangling = dangling.count() > 0
+    verts = verts.join(
+        dangling.withColumn("_d", F.lit(True)), "vid", "left"
+    ).select("vid", F.coalesce("_d", F.lit(False)).alias("dang"))
+    return _Setup(edges_prep, verts, n, p, has_dangling, cached)
+
+
+def _step(
+    g: _Setup,
+    state: DataFrame,
+    damping: float,
+    base: Column,
+    reset: Column | None = None,
+    salt: int | None = None,
+    prev: bool = False,
+) -> DataFrame:
+    """Step builder: the next state ``base + d·(s + dm·reset)`` of
+    ``state(vid, <flags>, rank)``. Every state column other than vid, rank
+    and prev rides through unchanged; ``prev=True`` adds the current rank
+    as ``prev``. ``reset=None`` spreads the dangling mass uniformly
+    (dm / n). The dangling term exists only when the setup found dangling
+    vertices."""
+    carry = [c for c in state.columns if c not in ("vid", "rank", "prev")]
+    rside = (
+        state.select("vid", "rank")
+        .withColumnRenamed("vid", "src")
+        .hint("shuffle_hash")
+    )
+    joined = g.edges.join(rside, "src")
+    contrib = (F.col("rank") * F.col("frac")).alias("contrib")
+    if salt:
+        # deterministic salt (hash of src) — two-phase agg bounds the
+        # per-reducer volume of any hub dst key
+        contribs = (
+            joined.select(
+                "dst", contrib, F.pmod(F.hash("src"), F.lit(salt)).alias("_salt")
+            )
+            .groupBy("dst", "_salt")
+            .agg(F.sum("contrib").alias("contrib"))
+        )
+    else:
+        contribs = joined.select("dst", contrib)
+    summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
+    keep = carry + ([F.col("rank").alias("prev")] if prev else [])
+    new = state.select("vid", *keep).join(
+        summed.withColumnRenamed("dst", "vid").hint("shuffle_hash"),
+        "vid",
+        "left",
+    )
+    s = F.coalesce(F.col("s"), F.lit(0.0))
+    if g.has_dangling:
+        # one-row frame, broadcast-cross-joined: keeps the whole iteration
+        # a single Spark job (no driver collect)
+        dm_df = state.agg(
+            F.coalesce(
+                F.sum(F.when(F.col("dang"), F.col("rank"))), F.lit(0.0)
+            ).alias("dm")
+        )
+        new = new.crossJoin(F.broadcast(dm_df))
+        s = s + (
+            F.col("dm") / F.lit(float(g.n))
+            if reset is None
+            else F.col("dm") * reset
+        )
+    return new.select(
+        "vid",
+        *carry,
+        *(["prev"] if prev else []),
+        (base + F.lit(damping) * s).alias("rank"),
+    )
+
+
+def _iterate(
+    spark: SparkSession,
+    g: _Setup,
+    state0: DataFrame,
+    step,
+    iterations: int,
+    driver: IterationDriver | None = None,
+    resume: bool = False,
+    init: DataFrame | None = None,
+    tol: float | None = None,
+    trace: bool = False,
+) -> tuple[DataFrame, list[tuple[int, float]]]:
+    """Loop: runs ``step(state, prev)`` on the driver from ``state0`` (or
+    from the store's snapshot with ``resume``; ``init(vid, rank)`` warm
+    starts, vertices absent from it keep state0's rank). With ``tol`` or
+    ``trace`` each iteration's one action is the L1 aggregate over the
+    cache it fills; ``tol`` stops once it drops below. Returns the final
+    state and the (iteration, l1) list."""
+    drv = driver or IterationDriver()
+    l1s: list[tuple[int, float]] = []
+    resumed = drv.try_resume(spark) if resume else None
+    if resumed is not None:
+        state, start_it, hist = resumed
+        # reseed the tol-mode stopping state: a run that already converged
+        # (last logged l1_diff < tol) must not run an extra iteration —
+        # that would return a different vector than the uninterrupted run
+        prev_l1 = hist.get(start_it, {}).get("l1_diff")
+        if tol is not None and prev_l1 is not None and float(prev_l1) < tol:
+            return drv.finish(start_it), l1s
+    else:
+        if init is not None:
+            # warm start (crawl refresh): the recurrence is memoryless, so
+            # warm(r_k, j iters) == cold(k + j iters) on unchanged edges
+            state0 = state0.join(
+                init.select("vid", F.col("rank").alias("_ir")), "vid", "left"
+            ).select(
+                *[c for c in state0.columns if c != "rank"],
+                F.coalesce("_ir", "rank").alias("rank"),
+            )
+        state = drv.start(state0.repartition(g.p, "vid"))
+        start_it = 0
+    track = tol is not None or trace
+    it = start_it
+    for it in range(start_it + 1, iterations + 1):
+        new_state = step(state, track)
+        if not track:
+            state = drv.step(new_state, it)
+            continue
+        prepared = drv.prepare(new_state, it)
+        l1 = float(
+            prepared.agg(F.sum(F.abs(F.col("rank") - F.col("prev")))).collect()[0][0]
+        )
+        l1s.append((it, l1))
+        state = drv.install(prepared, it, l1_diff=l1)
+        if tol is not None and l1 < tol:
+            break
+    return drv.finish(it), l1s
 
 
 def pagerank(
@@ -63,13 +266,13 @@ def pagerank(
     salt: int | None = None,
     driver: IterationDriver | None = None,
     vertices: DataFrame | None = None,
-    mode: str = "sql",
-    num_blocks: int = 64,
     resume: bool = False,
     num_partitions: int | None = None,
     init: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (vid BIGINT, rank DOUBLE). Matches oracle.pagerank to 1e-6.
+
+        r' = (1-d)/n + d * ( sum_{u->v} r_u * w(u,v)/wout(u) + dm/n )
 
     ``init``: optional (vid, rank) warm-start vector (crawl refresh —
     continue from the previous run's ranks over an updated edge table);
@@ -77,202 +280,20 @@ def pagerank(
     on unchanged edges (pytest-pinned; driver row pagerank_warm2).
 
     Vertex set: dense range(n), or an explicit ``vertices(vid)`` table
-    (sparse id spaces).
-
-    mode="sql": groupBy(dst).sum — two edge-sized exchanges per iteration
-    (join shuffle + agg shuffle, partial agg shrinking the second).
-    mode="csr": the north-star Arrow path — edges carry a precomputed
-    ``block = pmod(dst, num_blocks)``; after the rank join, each block's
-    rows land in ONE pandas group and the scatter-aggregate runs as numpy
-    reduceat (every dst is wholly owned by its block, so the kernel output
-    is final — the groupBy(dst) shuffle disappears)."""
-    drv = driver or IterationDriver()
-    # co-partitioning contract (same as lpa_sync): edges cached hash(src, P),
-    # iterated ranks carried hash(vid, P) -> the per-iteration join and the
-    # verts re-join are exchange-free; only the dst aggregation shuffles
-    # (with map-side partial agg). One edge-sized exchange per iteration.
-    # Both per-iteration joins carry a SHUFFLE_HASH hint (r7, guide §3.1):
-    # without it the planner broadcast-joins the rank vector whenever its
-    # estimate fits the threshold — a serial driver collect+build+ship of
-    # the FULL vertex state every iteration (and at scale, where the state
-    # can never broadcast, a SortMergeJoin would re-sort the cached edge
-    # table every iteration). The hinted shuffled-hash join keeps the zip
-    # join exchange-free, builds the per-partition hash map from the
-    # vertex-sized side in parallel, and sorts nothing. Measured at
-    # scale-20/ef-12 local[32]: 10 iterations 20.1s -> 14.5s together with
-    # the dangling-flag rewrite below (BENCH/r07/variant2.out).
-    if vertices is not None:
-        verts = vertices.select("vid").distinct().persist()
-        n = verts.count()
-    else:
-        assert n is not None
-        # plain distributed range — cheap to rescan, never persisted (r7:
-        # the loop no longer re-joins a vertex table, see below)
-        verts = vertex_range(spark, n)
-    p = adaptive_partitions(spark, n, num_partitions)
-
-    # r7 setup shape (guide §2.4): repartition the edge table FIRST, then
-    # derive wout on that partitioning — the out-weight aggregation and the
-    # frac join both ride the ONE edge shuffle (ReuseExchange dedups the
-    # repartition subtree), replacing the old agg-exchange + broadcast-join
-    # + full-repartition chain.
-    e2 = edges.select("src", "dst", "weight").repartition(p, "src")
-    wout = e2.groupBy("src").agg(F.sum("weight").alias("wout"))
-    edges_prep = e2.join(wout.hint("shuffle_hash"), "src").select(
-        "src", "dst", (F.col("weight") / F.col("wout")).alias("frac")
-    ).persist()
-    edges_prep.count()
-    # dangling = vertices absent from the distinct-src set; read from the
-    # just-filled edges_prep cache, not a second pass over the input frame
-    dangling = verts.join(
-        edges_prep.select(F.col("src").alias("vid")).distinct(),
-        "vid",
-        "left_anti",
-    ).persist()
-    has_dangling = dangling.count() > 0
-    # r7: the dangling mass no longer re-joins the (broadcast) dangling set
-    # against the rank vector every iteration — the driver re-collected and
-    # re-broadcast the dangling vids each time. Instead the iterated state
-    # carries a precomputed `dang` flag and dm is ONE conditional agg over
-    # the cached state (same float accumulation order: the semi-join also
-    # streamed the state side). The flag rides the state through the
-    # per-iteration left join, whose base is the previous state itself —
-    # no separately cached vertex table in the loop at all.
-    verts_f = verts.join(
-        dangling.withColumn("_d", F.lit(True)), "vid", "left"
-    ).select("vid", F.coalesce("_d", F.lit(False)).alias("dang"))
-
-    def _release():
-        edges_prep.unpersist()
-        dangling.unpersist()
-        if vertices is not None:
-            verts.unpersist()
-
-    resumed = drv.try_resume(spark) if resume else None
-    if resumed is not None:
-        ranks, start_it, hist = resumed
-        # reseed the tol-mode stopping state: a run that already converged
-        # (last logged l1_diff < tol) must not re-run an extra iteration —
-        # that would return a different rank vector than the uninterrupted
-        # run (same contract as cc's changed==0 reseed)
-        prev_l1 = hist.get(start_it, {}).get("l1_diff")
-        if tol is not None and prev_l1 is not None and float(prev_l1) < tol:
-            out = drv.finish(start_it)
-            _release()
-            return out.select("vid", "rank")
-    elif init is not None:
-        # warm start (crawl refresh): continue power iteration from an
-        # existing rank vector — e.g. the previous crawl's converged ranks
-        # over an updated edge table. The recurrence is memoryless, so
-        # warm(r_k, j iters) == cold(k + j iters) when edges are unchanged
-        # (pytest-pinned); on changed edges it converges in the few
-        # iterations the perturbation needs instead of from scratch.
-        # Vertices missing from init (newly crawled) start at 1/n.
-        ranks = drv.start(
-            verts_f.join(
-                init.select("vid", F.col("rank").alias("_ir")), "vid", "left"
-            )
-            .select(
-                "vid",
-                "dang",
-                F.coalesce("_ir", F.lit(1.0 / n)).alias("rank"),
-            )
-            .repartition(p, "vid")
+    (sparse id spaces)."""
+    with _setup(spark, edges, n, vertices, num_partitions) as g:
+        base = F.lit((1.0 - damping) / g.n)
+        out, _ = _iterate(
+            spark,
+            g,
+            g.verts.withColumn("rank", F.lit(1.0 / g.n)),
+            lambda s, prev: _step(g, s, damping, base, salt=salt, prev=prev),
+            iterations,
+            driver,
+            resume=resume,
+            init=init,
+            tol=tol,
         )
-        start_it = 0
-    else:
-        ranks = drv.start(
-            verts_f.withColumn("rank", F.lit(1.0 / n)).repartition(p, "vid")
-        )
-        start_it = 0
-    l1 = None
-    it = start_it
-    for it in range(start_it + 1, iterations + 1):
-        if has_dangling:
-            # 1-row DF, broadcast-cross-joined below: keeps the whole
-            # iteration a single Spark job (no driver collect). The state
-            # carries its dang flag, so this is a bare conditional agg over
-            # the cached state — nothing joins, nothing re-broadcasts.
-            dm_df = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))), F.lit(0.0)
-                ).alias("dm")
-            )
-        else:
-            dm_df = spark.createDataFrame([(0.0,)], "dm DOUBLE")
-        rside = (
-            ranks.select("vid", "rank")
-            .withColumnRenamed("vid", "src")
-            .hint("shuffle_hash")
-        )
-        contribs = edges_prep.join(rside, "src").select(
-            "dst", (F.col("rank") * F.col("frac")).alias("contrib")
-        )
-        if salt:
-            # deterministic salt (hash of src) — two-phase agg bounds the
-            # per-reducer volume of any hub dst key
-            contribs = (
-                edges_prep.join(rside, "src")
-                .select(
-                    "dst",
-                    (F.col("rank") * F.col("frac")).alias("contrib"),
-                    F.pmod(F.hash("src"), F.lit(salt)).alias("_salt"),
-                )
-                .groupBy("dst", "_salt")
-                .agg(F.sum("contrib").alias("contrib"))
-            )
-        if mode == "csr":
-            # same `contribs` plan as sql mode (including the optional salted
-            # (dst, _salt) pre-aggregation — the hub-skew guard applies to
-            # both paths); every dst is wholly owned by its block so the
-            # kernel's per-dst sums are final, no groupBy(dst) shuffle
-            joined = contribs.select(
-                F.pmod(F.col("dst"), F.lit(num_blocks)).alias("block"),
-                "dst",
-                "contrib",
-            )
-            summed = joined.groupBy("block").applyInPandas(
-                _scatter_kernel, "vid BIGINT, s DOUBLE"
-            ).withColumnRenamed("vid", "dst")
-        else:
-            summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
-        new_ranks = (
-            ranks.select("vid", "dang")
-            .join(
-                summed.withColumnRenamed("dst", "vid").hint("shuffle_hash"),
-                "vid",
-                "left",
-            )
-            .crossJoin(F.broadcast(dm_df))
-            .select(
-                "vid",
-                "dang",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-        )
-        if tol is not None:
-            prepared = drv.prepare(new_ranks, it)
-            diff = (
-                prepared.select("vid", F.col("rank").alias("r2"))
-                .join(ranks.select("vid", "rank"), "vid")
-                .agg(F.sum(F.abs(F.col("r2") - F.col("rank"))))
-                .collect()[0][0]
-            )
-            l1 = float(diff)
-            ranks = drv.install(prepared, it, l1_diff=l1)
-            if l1 < tol:
-                break
-        else:
-            ranks = drv.step(new_ranks, it)
-    out = drv.finish(it)
-    _release()
     return out.select("vid", "rank")
 
 
@@ -293,107 +314,36 @@ def personalized_pagerank(
 
         r' = (1-d) * p + d * (scatter + dangling_mass * p),   r0 = p
 
-    Plan shape is the same as pagerank() (ONE edge-sized exchange per
-    iteration): the reset column is joined into the cached vertex table
-    ONCE via a broadcast of the seed set (seed sets are small — a user's
-    trust set, a topic whitelist — vs a TB edge table), so per iteration
-    nothing new shuffles. Matches oracle.personalized_pagerank to 1e-6.
-    """
-    drv = driver or IterationDriver()
-    if vertices is not None:
-        verts = vertices.select("vid").distinct().persist()
-        n = verts.count()
-    else:
-        assert n is not None
-        verts = vertex_range(spark, n)
-    p = adaptive_partitions(spark, n, num_partitions)
+    Plan shape is pagerank()'s: the reset column is joined into the vertex
+    table ONCE via a broadcast of the seed set (seed sets are small — a
+    user's trust set, a topic whitelist — vs a TB edge table) and rides the
+    iterated state, so per iteration nothing new shuffles. Matches
+    oracle.personalized_pagerank to 1e-6."""
     seed_df = seeds.select("vid").distinct().persist()
     n_seeds = seed_df.count()
     if n_seeds == 0:
+        seed_df.unpersist()
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-
-    # r7: same loop shape as pagerank() — one edge shuffle in setup
-    # (ReuseExchange over the src repartition), dangling derived from the
-    # filled cache, reset/dang flags carried IN the iterated state (the
-    # per-iteration left-join base is the previous state), SHUFFLE_HASH
-    # hints on both per-iteration joins.
-    e2 = edges.select("src", "dst", "weight").repartition(p, "src")
-    wout = e2.groupBy("src").agg(F.sum("weight").alias("wout"))
-    edges_prep = e2.join(wout.hint("shuffle_hash"), "src").select(
-        "src", "dst", (F.col("weight") / F.col("wout")).alias("frac")
-    ).persist()
-    edges_prep.count()
-    dangling = verts.join(
-        edges_prep.select(F.col("src").alias("vid")).distinct(),
-        "vid",
-        "left_anti",
-    ).persist()
-    has_dangling = dangling.count() > 0
-    vreset = (
-        verts.join(
+    with _setup(spark, edges, n, vertices, num_partitions) as g:
+        g.cached.append(seed_df)
+        state0 = g.verts.join(
             F.broadcast(seed_df.withColumn("_s", F.lit(1.0))), "vid", "left"
-        )
-        .join(dangling.withColumn("_d", F.lit(True)), "vid", "left")
-        .select(
+        ).select(
             "vid",
             (F.coalesce(F.col("_s"), F.lit(0.0)) / F.lit(float(n_seeds))).alias(
                 "reset"
             ),
-            F.coalesce("_d", F.lit(False)).alias("dang"),
+            "dang",
+        ).withColumn("rank", F.col("reset"))
+        base = F.lit(1.0 - damping) * F.col("reset")
+        out, _ = _iterate(
+            spark,
+            g,
+            state0,
+            lambda s, prev: _step(g, s, damping, base, F.col("reset"), prev=prev),
+            iterations,
+            driver,
         )
-    )
-
-    ranks = drv.start(
-        vreset.withColumn("rank", F.col("reset")).repartition(p, "vid")
-    )
-    it = 0
-    for it in range(1, iterations + 1):
-        if has_dangling:
-            dm_df = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))), F.lit(0.0)
-                ).alias("dm")
-            )
-        else:
-            dm_df = spark.createDataFrame([(0.0,)], "dm DOUBLE")
-        rside = (
-            ranks.select("vid", "rank")
-            .withColumnRenamed("vid", "src")
-            .hint("shuffle_hash")
-        )
-        contribs = edges_prep.join(rside, "src").select(
-            "dst", (F.col("rank") * F.col("frac")).alias("contrib")
-        )
-        summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
-        new_ranks = (
-            ranks.select("vid", "reset", "dang")
-            .join(
-                summed.withColumnRenamed("dst", "vid").hint("shuffle_hash"),
-                "vid",
-                "left",
-            )
-            .crossJoin(F.broadcast(dm_df))
-            .select(
-                "vid",
-                "reset",
-                "dang",
-                (
-                    F.lit(1.0 - damping) * F.col("reset")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("dm") * F.col("reset")
-                    )
-                ).alias("rank"),
-            )
-        )
-        ranks = drv.step(new_ranks, it)
-    out = drv.finish(it)
-    edges_prep.unpersist()
-    dangling.unpersist()
-    seed_df.unpersist()
-    if vertices is not None:
-        verts.unpersist()
     return out.select("vid", "rank")
 
 
@@ -407,109 +357,68 @@ def pagerank_trace(
     """(iter, l1_delta): per-iteration L1 movement of the rank vector —
     the convergence diagnostic run before committing an iteration budget
     on a new crawl (pick the knee of the curve, then run pagerank() with
-    that budget). Same recurrence as pagerank() sql mode (uniform init,
-    out-weight-normalized contributions, dangling mass redistributed
-    uniformly); l1_delta(i) = sum_v |r_i(v) - r_{i-1}(v)|, rounded 9.
+    that budget). pagerank()'s recurrence from the uniform start;
+    l1_delta(i) = sum_v |r_i(v) - r_{i-1}(v)|, rounded 9.
 
-    100 TB shape: identical per-iteration plan to pagerank() (ONE
-    edge-sized join + ONE dst agg, dangling mass as a broadcast one-row
-    frame) plus one vertex-sized join for the delta; the only driver
-    traffic is one scalar per iteration (the banked trace row), same
-    collect class as the tol-mode l1 probe. Frames persist one iteration
-    and are released; output is `iterations` rows."""
-    # r7: persist the vertex set — the incoming frame is typically an
-    # unmaterialized distinct over a full derivation pipeline, and the old
-    # loop re-ran that pipeline inside EVERY iteration's join base (plus
-    # twice more for the dangling/init builds)
-    verts = vertices.select("vid").distinct().persist()
-    n = verts.count()
-    if n == 0:
-        verts.unpersist()
-        return spark.createDataFrame([], "iter INT, l1_delta DOUBLE")
-    wout = edges.groupBy("src").agg(F.sum("weight").alias("wout"))
-    edges_prep = (
-        edges.join(wout, "src")
-        .select("src", "dst", (F.col("weight") / F.col("wout")).alias("frac"))
-        .persist()
-    )
-    edges_prep.count()
-    # persisted like pagerank()'s: the left_anti derivation is an
-    # edge-sized distinct that must not re-run every iteration; reads the
-    # just-filled edges_prep cache, not the raw input pipeline
-    dangling = verts.join(
-        edges_prep.select(F.col("src").alias("vid")).distinct(),
-        "vid",
-        "left_anti",
-    ).persist()
-    # r7: the dang flag rides the state; the per-iteration left-join base
-    # is the previous state (the vertex distinct is never recomputed in
-    # the loop); the dangling mass for iteration t+1 is collected as a
-    # SECOND scalar of iteration t's l1 action and enters the next plan as
-    # a literal — no dm subtree, no per-iteration broadcast, and the l1
-    # delta itself is a carried `prev` column, so the action aggregates
-    # only the state being cached. The old state appears exactly twice in
-    # each new plan (rank side + join base) vs three times before — plan
-    # growth 2^t instead of 3^t over the (small, diagnostic) iteration
-    # budget, measured 7.2 -> ~4 s at sf0.1 (scripts/debug_trace.py).
-    ranks = (
-        verts.join(dangling.withColumn("_d", F.lit(True)), "vid", "left")
-        .select(
-            "vid",
-            F.coalesce("_d", F.lit(False)).alias("dang"),
-            F.lit(1.0 / n).alias("rank"),
+    Same per-iteration plan as pagerank(tol=...): the state carries
+    ``prev``, the L1 is one aggregate over the cache each iteration's
+    action fills, and the only driver traffic is that one scalar per
+    iteration. Lineage is cut every iteration and every cache is released;
+    output is ``iterations`` rows."""
+    with _setup(spark, edges, None, vertices, None) as g:
+        if g.n == 0:
+            return spark.createDataFrame([], "iter INT, l1_delta DOUBLE")
+        base = F.lit((1.0 - damping) / g.n)
+        out, l1s = _iterate(
+            spark,
+            g,
+            g.verts.withColumn("rank", F.lit(1.0 / g.n)),
+            lambda s, prev: _step(g, s, damping, base, prev=prev),
+            iterations,
+            trace=True,
         )
-        .persist()
-    )
-    dm = float(
-        ranks.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("dang"), F.col("rank"))), F.lit(0.0)
-            ).alias("dm")
-        ).collect()[0]["dm"]
-    )
-    rows = []
-    for it in range(1, iterations + 1):
-        summed = (
-            edges_prep.join(
-                ranks.select("vid", "rank").withColumnRenamed("vid", "src"),
-                "src",
-            )
-            .select("dst", (F.col("rank") * F.col("frac")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-        )
-        new_ranks = (
-            ranks.select("vid", "dang", F.col("rank").alias("prev"))
-            .join(summed.withColumnRenamed("dst", "vid"), "vid", "left")
-            .select(
-                "vid",
-                "dang",
-                "prev",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.lit(dm) / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .persist()
-        )
-        row = new_ranks.agg(
-            F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
-            F.coalesce(
-                F.sum(F.when(F.col("dang"), F.col("rank"))), F.lit(0.0)
-            ).alias("dm"),
-        ).collect()[0]
-        dm = float(row["dm"])
-        rows.append((it, float(row["l1"])))
-        ranks.unpersist()
-        ranks = new_ranks
-    ranks.unpersist()
-    edges_prep.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
-    return spark.createDataFrame(rows, "iter INT, l1_delta DOUBLE").select(
+        release(out)
+    return spark.createDataFrame(l1s, "iter INT, l1_delta DOUBLE").select(
         "iter", F.round("l1_delta", 9).alias("l1_delta")
     )
+
+
+def katz(
+    spark: SparkSession,
+    edges: DataFrame,
+    n: int | None = None,
+    iterations: int = 10,
+    alpha: float = 0.05,
+    beta: float = 1.0,
+    driver: IterationDriver | None = None,
+    vertices: DataFrame | None = None,
+    num_partitions: int | None = None,
+    resume: bool = False,
+) -> DataFrame:
+    """Katz centrality (Katz 1953), (vid BIGINT, score DOUBLE):
+
+        x_t = beta + alpha * sum over in-edges (w * x_{t-1}[src]),  x_0 = beta
+
+    for ``iterations`` rounds — all incoming walks attenuated by
+    alpha^length, the influence measure when teleport-style normalization
+    is not wanted. Converges iff alpha < 1/lambda_max(A); with integer
+    link-count weights, alpha well under 1/max_weighted_indegree is the
+    safe practical bound (stated — the spectral radius is not estimated).
+    Scores stay raw (beta-anchored), so there is no dangling-mass term and
+    no global reduce in the loop; a vertex with no in-edges keeps score
+    beta. Scores are rounded to
+    9 decimals at the END only (the repo's cross-engine sum-order
+    convention). With a checkpoint-backed driver and ``resume=True``,
+    continues from the latest snapshot — kill-at-k == uninterrupted."""
+    base = F.lit(float(beta))
+    with _setup(spark, edges, n, vertices, num_partitions, normalize=False) as g:
+        out, _ = _iterate(
+            spark,
+            g,
+            g.verts.withColumn("rank", base),
+            lambda s, prev: _step(g, s, alpha, base, prev=prev),
+            iterations,
+            driver,
+            resume=resume,
+        )
+    return out.select("vid", F.round("rank", 9).alias("score"))

@@ -90,7 +90,7 @@ def random_walks(
     adj = e.groupBy("src").agg(
         F.sort_array(F.collect_set("dst")).alias("nbrs")
     ).persist()
-    cached = [adj]  # every persisted frame, released via _finish_walks
+    cached = [adj]  # every persisted frame, released via _explode_paths
 
     verts = (
         edges.select(F.col("src").cast("long").alias("vid"))
@@ -135,18 +135,6 @@ def random_walks(
         if t % 8 == 0 and t < walk_length:
             state = state.localCheckpoint(eager=True)
     return _explode_paths(state, cached)
-
-
-def _finish_walks(out: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Materialize the walk table (eager localCheckpoint, reading the
-    just-filled step caches once) and RELEASE every persisted frame —
-    the scc.py persist->checkpoint->unpersist discipline. Without this,
-    repeated calls (bench reps) accumulate adjacency + per-step frontier
-    caches with no release handle (ADVICE r5)."""
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
 
 
 def _explode_paths(state: DataFrame, cached: list[DataFrame]) -> DataFrame:

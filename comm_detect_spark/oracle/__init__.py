@@ -29,6 +29,7 @@ from comm_detect_spark.oracle.algorithms import (  # noqa: F401
 from comm_detect_spark.oracle.graphs import (  # noqa: F401
     hub_star,
     jazz_edges,
+    karate_edges,
     ring_of_cliques,
     rmat_edges,
     two_components,

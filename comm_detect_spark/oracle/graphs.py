@@ -52,6 +52,19 @@ def jazz_edges(path: str = _JAZZ):
     return parse_dimacs(path)
 
 
+def karate_edges():
+    """networkx's Zachary karate club (34 nodes, 78 edges, integer
+    weights) as adjacency entries — an in-repo real weighted graph."""
+    import networkx as nx
+
+    g = nx.karate_club_graph()
+    pairs = [(u, v, d["weight"]) for u, v, d in g.edges(data=True)]
+    src = np.array([u for u, _, _ in pairs] + [v for _, v, _ in pairs], np.int64)
+    dst = np.array([v for _, v, _ in pairs] + [u for u, _, _ in pairs], np.int64)
+    w = np.array([x for _, _, x in pairs] * 2, np.int64)
+    return g.number_of_nodes(), src, dst, w
+
+
 def _symmetrize(pairs: list[tuple[int, int]], n: int):
     """Undirected (u,v) pairs (u != v) -> both-direction entries, w=1."""
     src = np.array([p[0] for p in pairs] + [p[1] for p in pairs], np.int64)

@@ -17,59 +17,33 @@ from pyspark.storagelevel import StorageLevel
 
 from comm_detect_spark.plans.checkpoint import CheckpointStore
 
+# every iteration state is cached at this level
+_LEVEL = StorageLevel.MEMORY_AND_DISK
+
 
 class IterationDriver:
     def __init__(
         self,
         store: CheckpointStore | None = None,
         checkpoint_every: int = 1,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        materialize_every: int = 1,
     ):
         # checkpoint_every=1: truncate lineage EVERY iteration. Anything
         # sparser lets the logical plan deepen linearly with iteration count
         # until Catalyst's own tree traversals dominate runtime (observed:
         # jazz Louvain went 30s -> 700s+ from plan growth alone).
-        #
-        # materialize_every=m>1 (fixed-iteration step() callers only):
-        # chain m iterations into ONE Spark job — intermediate states are
-        # neither persisted nor counted, so the per-iteration fixed driver
-        # cost (job launch + Catalyst analysis, measured ~1.4 s/iter on
-        # this host, scaling_bench r6) is paid once per m iterations.
-        # Result is bit-identical to m single steps (pytest-pinned).
-        # MEASURED (scale-18 RMAT, 8 cores, BENCH/lpa_fixed_rounds_r6.json):
-        # LPA sync m=3 is 2.2x SLOWER than per-sweep materialization —
-        # lpa_step references its input state TWICE (edge join + keep-label
-        # join), so the unmaterialized chain re-evaluates geometrically;
-        # pagerank m=3 measured ~8% slower for the same reason (3-fold
-        # fan-out). An earlier note here claimed LPA m=3 was 12% faster;
-        # that was recorded when lpa_sync's counting loop (prepare/install)
-        # silently ignored materialize_every, so the chain never engaged —
-        # retracted once the r6 fixed-rounds step() path made it real.
-        # Default stays 1; only a recurrence that reads its state ONCE per
-        # step can win from chaining, and no current operator qualifies.
-        # Incompatible with a CheckpointStore (resumable runs snapshot
-        # per iteration) and with callers that run their own changed-count
-        # action per iteration (prepare/install — they need per-iter
-        # materialization by definition).
-        if store is not None and materialize_every != 1:
-            raise ValueError(
-                "materialize_every > 1 requires store=None (resumable "
-                "runs materialize per iteration)"
-            )
         self.store = store
         self.checkpoint_every = checkpoint_every
-        self.storage_level = storage_level
-        self.materialize_every = materialize_every
         self._current: DataFrame | None = None
-        self._pending: DataFrame | None = None
         # feeder cache of a not-yet-materialized lazy localCheckpoint
         # (install() truncation path); released once the checkpoint blocks
         # exist — see install()/finish()
         self._lazy_ckpt_cache: DataFrame | None = None
+        # superseded localCheckpoints, released once a newer checkpoint is
+        # materialized (see release())
+        self._spent_ckpts: list[DataFrame] = []
 
     def start(self, state: DataFrame, iteration: int = 0) -> DataFrame:
-        self._current = state.persist(self.storage_level)
+        self._current = state.persist(_LEVEL)
         self._current.count()
         return self._current
 
@@ -101,7 +75,7 @@ class IterationDriver:
         truncate = iteration % self.checkpoint_every == 0
         if truncate and self.store is not None:
             new_state = self.store.save_state(new_state, iteration)
-        return new_state.persist(self.storage_level)
+        return new_state.persist(_LEVEL)
 
     def install(self, prepared: DataFrame, iteration: int, **metrics) -> DataFrame:
         """Swap in a state returned by prepare() after the caller's action.
@@ -123,9 +97,10 @@ class IterationDriver:
             self._current.unpersist()
         if self._lazy_ckpt_cache is not None:
             # the previous lazy checkpoint has been materialized by the
-            # caller's action this iteration — its feeder cache can go
-            self._lazy_ckpt_cache.unpersist()
-            self._lazy_ckpt_cache = None
+            # caller's action this iteration — its feeder cache and the
+            # checkpoints before it can go; it is itself superseded
+            self._release_spent()
+            self._spent_ckpts.append(self._current)
         self._lazy_ckpt_cache = pre_ckpt
         self._current = prepared
         if self.store is not None:
@@ -134,16 +109,7 @@ class IterationDriver:
 
     def step(self, new_state: DataFrame, iteration: int, **metrics) -> DataFrame:
         """prepare + materialize + install, for callers with no action of
-        their own. With materialize_every=m > 1, m-1 of every m steps
-        chain lazily (no job) and the m-th materializes the whole chain
-        at once; the last materialized cache stays hot underneath the
-        chain so nothing recomputes."""
-        if (
-            self.materialize_every > 1
-            and iteration % self.materialize_every != 0
-        ):
-            self._pending = new_state
-            return new_state
+        their own."""
         # NOTE (r7): a "fold" that localCheckpoint(eager)s the RAW new_state
         # directly (skipping prepare+count) was tried and REVERTED: the
         # checkpointed LogicalRDD then inherits the raw tree's ESTIMATED
@@ -158,26 +124,35 @@ class IterationDriver:
         # is achieved without the fold.
         prepared = self.prepare(new_state, iteration)
         prepared.count()
-        self._pending = None
         return self.install(prepared, iteration, **metrics)
 
     def finish(self, iteration: int, **metrics) -> DataFrame:
-        if self._pending is not None:
-            # the loop ended on a lazy step — materialize the tail chain
-            prepared = self.prepare(self._pending, iteration)
-            prepared.count()
-            self._pending = None
-            self.install(prepared, iteration)
         assert self._current is not None
         if self._lazy_ckpt_cache is not None:
             # the loop ended right after a lazy truncation: materialize the
             # checkpoint from the still-live cache, then release it
             self._current.count()
-            self._lazy_ckpt_cache.unpersist()
-            self._lazy_ckpt_cache = None
+            self._release_spent()
         if self.store is not None:
             final = self.store.save_state(self._current, iteration)
             self.store.log_metric(iteration, final=True, **metrics)
             self._current.unpersist()
             return final
         return self._current
+
+    def _release_spent(self) -> None:
+        self._lazy_ckpt_cache.unpersist()
+        self._lazy_ckpt_cache = None
+        for ckpt in self._spent_ckpts:
+            release(ckpt)
+        self._spent_ckpts = []
+
+
+def release(df: DataFrame) -> None:
+    """unpersist(), plus the blocks of a localCheckpoint frame: those
+    belong to its LogicalRDD's RDD, which DataFrame.unpersist() does not
+    reach (left alone they wait for a JVM GC)."""
+    df.unpersist()
+    plan = df._jdf.logicalPlan()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

@@ -9,7 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from comm_detect_spark.oracle import Adjacency, jazz_edges
+from comm_detect_spark.oracle import Adjacency, jazz_edges, karate_edges, rmat_edges
 
 
 @pytest.fixture(scope="session")
@@ -38,6 +38,20 @@ def jazz_df(spark, jazz):
     df = edges_df(spark, n, s, d, w).persist()
     df.count()
     return df
+
+
+@pytest.fixture(scope="session", params=["rmat", "karate"])
+def directed_graph(request, spark):
+    """(n, src, dst, w, edges DataFrame) of an in-repo graph: a directed
+    R-MAT with dangling vertices and duplicate edges, or the weighted
+    karate club (both directions, no dangling vertex)."""
+    if request.param == "rmat":
+        n, s, d, w = rmat_edges(scale=7, edge_factor=4, seed=3)
+    else:
+        n, s, d, w = karate_edges()
+    df = edges_df(spark, n, s, d, w).persist()
+    df.count()
+    return n, s, d, w, df
 
 
 def edges_df(spark, n, src, dst, w):

@@ -47,53 +47,35 @@ class TestCheckpointStore:
 
 
 class TestResume:
-    def test_pagerank_resume_identical(self, spark, jazz, jazz_df, tmp_path):
-        n, s, d, w = jazz
-        # uninterrupted 10-iteration run
+    @pytest.mark.parametrize("tol", [None, 1e-12])
+    def test_pagerank_resume_identical(
+        self, spark, directed_graph, tmp_path, tol
+    ):
+        """Killed after iteration 3, resumed from the snapshot == the
+        uninterrupted run (with tol the snapshot also carries prev)."""
+        n, _, _, _, e = directed_graph
         full = to_vec(
-            pagerank(spark, jazz_df, n, iterations=10), n, dtype=np.float64
+            pagerank(spark, e, n, iterations=6, tol=tol), n, dtype=np.float64
         )
-
-        # run 1: checkpoint every iteration, stop ("crash") after 4
         store = CheckpointStore(str(tmp_path), "pr", algo="pagerank")
-        drv = IterationDriver(store=store, checkpoint_every=1)
-        pagerank(spark, jazz_df, n, iterations=4, driver=drv)
-        assert store.latest_iteration() == 4
-
-        # run 2: resume from snapshot 4, do the remaining 6 by hand through
-        # the same step code path
-        from pyspark.sql import functions as F
-
-        from comm_detect_spark.graph.core import out_weights, vertex_range
-
-        ranks = store.load_state(spark)
-        verts = vertex_range(spark, n)
-        wout = out_weights(jazz_df)
-        edges_prep = jazz_df.join(wout, "src").select(
-            "src", "dst", (F.col("weight") / F.col("wout")).alias("frac")
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pagerank(spark, e, n, iterations=6, tol=tol,
+                     driver=_KillAfterInstalls(store, kill_after=3))
+        assert store.latest_iteration() == 3
+        store2 = CheckpointStore(str(tmp_path), "pr", algo="pagerank")
+        resumed = to_vec(
+            pagerank(spark, e, n, iterations=6, tol=tol,
+                     driver=IterationDriver(store=store2, checkpoint_every=1),
+                     resume=True),
+            n, dtype=np.float64,
         )
-        for _ in range(6):
-            contribs = edges_prep.join(
-                ranks.withColumnRenamed("vid", "src"), "src"
-            ).select("dst", (F.col("rank") * F.col("frac")).alias("contrib"))
-            summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
-            ranks = verts.join(
-                summed.withColumnRenamed("dst", "vid"), "vid", "left"
-            ).select(
-                "vid",
-                (
-                    F.lit(0.15 / n)
-                    + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        resumed = to_vec(ranks, n, dtype=np.float64)
         assert np.allclose(resumed, full, atol=1e-12)
 
-    def test_metrics_logged_per_iteration(self, spark, jazz, jazz_df, tmp_path):
-        n = jazz[0]
+    def test_metrics_logged_per_iteration(self, spark, directed_graph, tmp_path):
+        n, _, _, _, e = directed_graph
         store = CheckpointStore(str(tmp_path), "prm", algo="pagerank")
         drv = IterationDriver(store=store, checkpoint_every=2)
-        pagerank(spark, jazz_df, n, iterations=4, tol=0.0, driver=drv)
+        pagerank(spark, e, n, iterations=4, tol=0.0, driver=drv)
         ms = store.metrics()
         assert [m["iteration"] for m in ms if not m.get("final")] == [1, 2, 3, 4]
         assert all(m["algo"] == "pagerank" for m in ms)
@@ -360,18 +342,18 @@ class TestLouvainResume:
 class TestOperatorResumeFlag:
     """resume=True on the operators themselves (jobs/run_algorithm --resume)."""
 
-    def test_pagerank_resume_flag(self, spark, jazz, jazz_df, tmp_path):
-        n = jazz[0]
+    def test_pagerank_resume_flag(self, spark, directed_graph, tmp_path):
+        n, _, _, _, e = directed_graph
         full = to_vec(
-            pagerank(spark, jazz_df, n, iterations=10), n, dtype=np.float64
+            pagerank(spark, e, n, iterations=10), n, dtype=np.float64
         )
         store = CheckpointStore(str(tmp_path), "prf", algo="pagerank")
-        pagerank(spark, jazz_df, n, iterations=4,
+        pagerank(spark, e, n, iterations=4,
                  driver=IterationDriver(store=store, checkpoint_every=1))
         assert store.latest_iteration() == 4
         store2 = CheckpointStore(str(tmp_path), "prf", algo="pagerank")
         resumed = to_vec(
-            pagerank(spark, jazz_df, n, iterations=10,
+            pagerank(spark, e, n, iterations=10,
                      driver=IterationDriver(store=store2, checkpoint_every=1),
                      resume=True),
             n, dtype=np.float64,

@@ -2,7 +2,6 @@
 semantics, one-exchange-per-iteration plan assertion."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from comm_detect_spark.operators.katz import katz
 from tests.conftest import edges_df
@@ -54,34 +53,11 @@ class TestKatz:
         assert got[0] == 2.0
 
     def test_one_exchange_per_iteration(self, spark):
-        # iteration body: gather join is exchange-free (edges cached on
-        # src, state on vid — alias-tracked partitioning); only the dst
-        # agg exchanges. Same contract and counter as the lpa/pagerank
-        # plan assertions (live_exchange_count skips cached subtrees).
-        from tests.test_plans import live_exchange_count, plan_of
+        # Katz's iteration from the core's step builder: the gather join is
+        # exchange-free (edges cached on src, state on vid); only the dst
+        # agg exchanges. Same counter as the pagerank/lpa plan assertions
+        # (live_exchange_count skips cached subtrees).
+        from tests.test_plans import live_exchange_count, power_iteration_plan
 
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            e = self._edges(spark).select(
-                "src", "dst", F.col("weight").cast("double").alias("w")
-            ).repartition(P, "src").persist()
-            e.count()
-            state = spark.range(N).select(
-                F.col("id").alias("vid"), F.lit(1.0).alias("score")
-            ).repartition(P, "vid").persist()
-            state.count()
-            gathered = (
-                e.join(
-                    state.select(F.col("vid").alias("src"),
-                                 F.col("score").alias("s")), "src")
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.sum(F.col("w") * F.col("s")).alias("contrib"))
-            )
-            new_state = state.select("vid").join(gathered, "vid", "left")
-            assert live_exchange_count(plan_of(new_state)) == 1
-            e.unpersist()
-            state.unpersist()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        plan = power_iteration_plan(spark, normalize=False)
+        assert live_exchange_count(plan) == 1, plan

@@ -26,30 +26,6 @@ def to_vec(df, n, key="vid", val=None, dtype=np.int64, default=0):
 
 
 class TestPageRank:
-    def test_jazz_allclose(self, spark, jazz, jazz_df):
-        n, s, d, w = jazz
-        got = to_vec(pagerank(spark, jazz_df, n, iterations=10), n, dtype=np.float64)
-        want = oracle.pagerank(n, s, d, w.astype(float), iterations=10)
-        assert np.allclose(got, want, atol=1e-6)
-
-    def test_salted_identical(self, spark, jazz, jazz_df):
-        n, s, d, w = jazz
-        plain = to_vec(pagerank(spark, jazz_df, n, iterations=5), n, dtype=np.float64)
-        salted = to_vec(
-            pagerank(spark, jazz_df, n, iterations=5, salt=4), n, dtype=np.float64
-        )
-        assert np.allclose(plain, salted, atol=1e-9)
-
-    def test_csr_mode_allclose(self, spark, jazz, jazz_df):
-        n, s, d, w = jazz
-        got = to_vec(
-            pagerank(spark, jazz_df, n, iterations=5, mode="csr", num_blocks=8),
-            n,
-            dtype=np.float64,
-        )
-        want = oracle.pagerank(n, s, d, w.astype(float), iterations=5)
-        assert np.allclose(got, want, atol=1e-9)
-
     def test_dangling_mass(self, spark):
         # 0 -> 1 -> 2, node 2 dangling
         e = edges_from_numpy(spark, 3, [0, 1], [1, 2], [1, 1])
@@ -262,20 +238,6 @@ class TestLocalClustering:
 
 
 class TestPersonalizedPageRank:
-    def test_matches_oracle_on_jazz(self, spark, jazz, jazz_df):
-        from comm_detect_spark.operators import personalized_pagerank
-
-        n, s, d, w = jazz
-        want = oracle.personalized_pagerank(
-            n, s, d, seeds=[0, 5, 17], weight=w.astype(float), iterations=8
-        )
-        seeds = spark.createDataFrame([(0,), (5,), (17,)], "vid BIGINT")
-        got = to_vec(
-            personalized_pagerank(spark, jazz_df, seeds, n=n, iterations=8),
-            n, val="rank", dtype=np.float64,
-        )
-        assert np.allclose(got, want, atol=1e-6)
-
     def test_mass_concentrates_on_seed_component(self, spark):
         """Two disconnected triangles; seeding one must leave the other at
         exactly zero (teleport never reaches it)."""
@@ -293,12 +255,13 @@ class TestPersonalizedPageRank:
         assert r[:3].sum() > 0.999
         assert np.all(r[3:] == 0.0)
 
-    def test_empty_seed_set_raises(self, spark, jazz_df):
+    def test_empty_seed_set_raises(self, spark):
         from comm_detect_spark.operators import personalized_pagerank
 
+        e = edges_from_numpy(spark, 3, [0, 1], [1, 2], [1, 1])
         seeds = spark.createDataFrame([], "vid BIGINT")
         with pytest.raises(ValueError):
-            personalized_pagerank(spark, jazz_df, seeds, n=10)
+            personalized_pagerank(spark, e, seeds, n=3)
 
 
 class TestHits:

@@ -3,6 +3,8 @@ column pruning reaches the parquet scan, aggregations are hash-based with
 map-side partial aggregation, the hot paths stay in whole-stage codegen,
 and nothing falls back to cartesian products."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,25 +79,48 @@ class TestAggAndJoins:
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
 
-    def test_pagerank_iteration_no_python_udf_in_sql_mode(self, spark, jazz_df):
-        from comm_detect_spark.graph.core import out_weights
-        from pyspark.sql import functions as F2
 
-        wout = out_weights(jazz_df)
-        prep = jazz_df.join(wout, "src").select(
-            "src", "dst", (F2.col("weight") / F2.col("wout")).alias("frac")
+def power_iteration_plan(spark, normalize: bool) -> str:
+    """Formatted plan of one iteration built by the power-iteration core's
+    step builder — PageRank's (``normalize=True``) or Katz's — over a graph
+    whose 97 vertices all have out-edges, with broadcast joins off."""
+    from comm_detect_spark.operators.pagerank import _setup, _step
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        # P must equal spark.sql.shuffle.partitions: the dst aggregation
+        # exchanges to the conf count, and the state re-join rides it
+        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        edges = spark.range(1000).select(
+            (F.col("id") % 97).alias("src"),
+            (F.col("id") % 89).alias("dst"),
+            F.lit(1).cast("bigint").alias("weight"),
         )
-        plan = plan_of(prep)
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        with _setup(spark, edges, 97, None, P, normalize=normalize) as g:
+            # a plain cached state: the setup's own cached frames nested in
+            # it would defeat live_lines' indentation walk
+            flags = [F.lit(False).alias("dang")] if normalize else []
+            state = (
+                spark.range(97)
+                .select(F.col("id").alias("vid"), *flags,
+                        F.lit(1.0 / 97).alias("rank"))
+                .repartition(P, "vid")
+                .persist()
+            )
+            state.count()
+            plan = plan_of(_step(g, state, 0.85, F.lit(0.15 / 97)))
+            state.unpersist()
+        return plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def live_exchange_count(plan: str) -> int:
-    """Shuffle exchanges in the LIVE plan tree: cached-relation subplans
-    (InMemoryRelation init) are excluded, broadcasts don't count."""
-    import re
-
+def live_lines(plan: str) -> list[str]:
+    """Lines of the LIVE plan tree: cached-relation subplans
+    (InMemoryRelation init) are excluded."""
     tree = plan.split("\n\n")[0]
-    count, skip_indent = 0, None
+    lines, skip_indent = [], None
     for line in tree.splitlines():
         m = re.search(r"[A-Za-z]", line)
         if not m:
@@ -108,9 +133,13 @@ def live_exchange_count(plan: str) -> int:
         if "InMemoryRelation" in line:
             skip_indent = ind
             continue
-        if re.search(r"\bExchange\b", line):
-            count += 1
-    return count
+        lines.append(line)
+    return lines
+
+
+def live_exchange_count(plan: str) -> int:
+    """Shuffle exchanges in the LIVE plan tree; broadcasts don't count."""
+    return sum(1 for line in live_lines(plan) if re.search(r"\bExchange\b", line))
 
 
 class TestShuffleBudget:
@@ -315,48 +344,16 @@ class TestShuffleBudget:
         assert all(rows[v] == v % 37 for v in range(500))
 
     def test_pagerank_iteration_single_exchange(self, spark):
-        """pagerank's per-iteration contract: cached edges_prep hash(src, P)
-        + ranks hash(vid, P) -> the only live exchange is the dst
-        aggregation (map-side partial agg included)."""
-        from comm_detect_spark.graph.core import out_weights
-
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            # P must equal spark.sql.shuffle.partitions: the dst aggregation
-            # exchanges to the conf count, and the verts join rides it
-            P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            edges = spark.range(1000).select(
-                (F.col("id") % 97).alias("src"),
-                (F.col("id") % 89).alias("dst"),
-                F.lit(1).cast("bigint").alias("weight"),
-            )
-            wout = out_weights(edges)
-            prep = (
-                edges.join(wout, "src")
-                .select("src", "dst", (F.col("weight") / F.col("wout")).alias("frac"))
-                .repartition(P, "src")
-                .persist()
-            )
-            prep.count()
-            verts = (
-                spark.range(97).select(F.col("id").alias("vid"))
-                .repartition(P, "vid").persist()
-            )
-            verts.count()
-            ranks = verts.withColumn("rank", F.lit(1.0 / 97))
-            contribs = prep.join(
-                ranks.withColumnRenamed("vid", "src"), "src"
-            ).select("dst", (F.col("rank") * F.col("frac")).alias("contrib"))
-            summed = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
-            new_ranks = verts.join(
-                summed.withColumnRenamed("dst", "vid"), "vid", "left"
-            ).select(
-                "vid",
-                (F.lit(0.15 / 97) + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
-            )
-            assert live_exchange_count(plan_of(new_ranks)) == 1, plan_of(new_ranks)
-            prep.unpersist()
-            verts.unpersist()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        """The power-iteration contract, on the core's real step builder
+        for uniform PageRank and for Katz: cached edges hash(src, P) +
+        state hash(vid, P) -> the only live exchange is the dst
+        aggregation (map-side partial agg included); shuffled-hash joins,
+        nothing sorts, no Python UDF."""
+        for normalize in (True, False):
+            plan = power_iteration_plan(spark, normalize)
+            live = "\n".join(live_lines(plan))
+            assert live_exchange_count(plan) == 1, plan
+            assert "ShuffledHashJoin" in live, plan
+            assert "SortMergeJoin" not in live, plan
+            assert not re.search(r"\bSort\b", live), plan
+            assert "EvalPython" not in live, plan

@@ -343,43 +343,6 @@ def test_edge_diff_classifies_added_removed_kept(spark):
     assert edge_diff(old, new).count() == 4
 
 
-def test_materialize_every_chain_is_bit_identical(spark, jazz):
-    """IterationDriver(materialize_every=3) chains 3 iterations into one
-    job; results must be bit-identical to per-iteration materialization
-    for both a linear-state recurrence (LPA) and a fan-out one (PR)."""
-    from comm_detect_spark.operators.lpa import lpa_sync
-    from comm_detect_spark.operators.pagerank import pagerank
-    from comm_detect_spark.plans.driver import IterationDriver
-
-    n, s, d, w = jazz
-    e = _edges(spark, list(zip(s.tolist(), d.tolist())), weights=w.tolist())
-    pr_a = {r["vid"]: r["rank"] for r in pagerank(
-        spark, e, n, iterations=4,
-        driver=IterationDriver(checkpoint_every=3)).collect()}
-    pr_b = {r["vid"]: r["rank"] for r in pagerank(
-        spark, e, n, iterations=4,
-        driver=IterationDriver(checkpoint_every=3, materialize_every=3),
-    ).collect()}
-    assert pr_a == pr_b
-    lp_a = {r["vid"]: r["label"] for r in lpa_sync(
-        spark, e, n, eps=-1.0, max_iter=4,
-        driver=IterationDriver(checkpoint_every=3)).collect()}
-    lp_b = {r["vid"]: r["label"] for r in lpa_sync(
-        spark, e, n, eps=-1.0, max_iter=4,
-        driver=IterationDriver(checkpoint_every=3, materialize_every=3),
-    ).collect()}
-    assert lp_a == lp_b
-
-
-def test_materialize_every_rejects_store(spark, tmp_path):
-    from comm_detect_spark.plans.checkpoint import CheckpointStore
-    from comm_detect_spark.plans.driver import IterationDriver
-
-    store = CheckpointStore(str(tmp_path), "x", algo="t")
-    with pytest.raises(ValueError, match="materialize_every"):
-        IterationDriver(store=store, materialize_every=3)
-
-
 # ---------------------------------------------------------------------------
 # distributed RMAT source
 # ---------------------------------------------------------------------------
